@@ -5,10 +5,10 @@ Reference semantics: /root/reference/cc2dataset/main.py:23-131 (predicates
 and projections), main.py:104-114 (absolutization), main.py:157-164 (base
 URL), main.py:166-176 (scheme filter, uid, provenance). Everything is a
 JVM-side expression except RFC-3986 ``urljoin``, which has no Spark
-built-in and is the pipeline's one Python (pandas/Arrow) UDF — and it is
-only ever applied to the minority of rows whose URL is relative, via a
-split/union plan rather than a per-row conditional (a Python UDF inside
-``when()`` would still be evaluated for every row by BatchEvalPython).
+built-in and is the pipeline's one Python (pandas/Arrow) UDF. That UDF
+also resolves the record's <base href>, so every kept link crosses the
+Python boundary exactly once and the plan stays linear: the source is
+scanned once, with no split/union branch re-reading it.
 """
 
 from __future__ import annotations
@@ -100,67 +100,55 @@ def link_alt(document_type: str) -> Column:
     return _DISPATCH[document_type][1]()
 
 
-@pandas_udf(StringType())
-def urljoin_udf(base: pd.Series, url: pd.Series) -> pd.Series:
-    """P10 — RFC-3986 resolution, byte-identical to Python's urljoin
-    (main.py:104-110: ValueError -> passthrough). Arrow-vectorized."""
+def absolute_url(
+    page_url: pd.Series, base_raw: pd.Series, url: pd.Series
+) -> pd.Series:
+    """P10 — the absolute URL of a link, byte-identical to the
+    reference's two Python steps, fused into one Arrow pass.
+
+    Base (main.py:157-164): urljoin(page_url, Head.Base); a null
+    <base href> or one that raises ValueError (e.g. 'http://[') keeps
+    the PAGE url. No absolute-scheme shortcut here: the reference calls
+    urljoin directly. Memoised per (page_url, base_raw) within the
+    batch, since every link of a record shares one base.
+
+    Link (main.py:104-110): an http(s):// url passes through, a url
+    whose urljoin raises ValueError passes through, None stays None;
+    anything else is urljoin(base, url)."""
     from urllib.parse import urljoin
 
-    def join(b, u):
-        if u is None:
-            return u
-        if u.startswith("http://") or u.startswith("https://"):
+    bases: dict = {}
+
+    def base_of(page, raw):
+        if raw is None:
+            return page
+        key = (page, raw)
+        if key not in bases:
+            try:
+                bases[key] = urljoin(page or "", raw)
+            except ValueError:
+                bases[key] = page
+        return bases[key]
+
+    def join(page, raw, u):
+        if u is None or u.startswith("http://") or u.startswith("https://"):
             return u
         try:
-            return urljoin(b or "", u)
+            return urljoin(base_of(page, raw) or "", u)
         except ValueError:
             return u
 
-    return pd.Series([join(b, u) for b, u in zip(base, url)])
-
-
-@pandas_udf(StringType())
-def resolve_base_udf(page_url: pd.Series, base_raw: pd.Series) -> pd.Series:
-    """Base-URL computation (main.py:157-164): base = urljoin(page_url,
-    Head.Base), but a malformed <base href> (ValueError) keeps the PAGE
-    url as base — the reference's `except ValueError: pass` — not the
-    raw Base string. No absolute-scheme shortcut here: the reference
-    calls urljoin directly for base resolution, so e.g. an invalid
-    'http://[' base raises and falls back to the page url."""
-    from urllib.parse import urljoin
-
-    def resolve(page, base):
-        if base is None:
-            return page
-        try:
-            return urljoin(page or "", base)
-        except ValueError:
-            return page
-
-    return pd.Series([resolve(p, b) for p, b in zip(page_url, base_raw)])
-
-
-def absolutize_urls(df: DataFrame, url: str = "url", base: str = "base_url") -> DataFrame:
-    """Resolve relative URLs against a base column.
-
-    Split/union plan: rows already absolute pass through untouched
-    (pure JVM filter); only relative rows cross the Python boundary.
-    Narrow transformations only — no shuffle is introduced.
-    """
-    # coalesce(false): a NULL url makes BOTH startswith branches NULL,
-    # and two complementary where()s would each drop the row — the row
-    # must instead take the relative branch, whose urljoin_udf handles
-    # None explicitly (passthrough), matching the reference's behavior
-    is_abs = F.coalesce(
-        F.col(url).startswith("http://")
-        | F.col(url).startswith("https://"),
-        F.lit(False),
+    return pd.Series(
+        [join(p, b, u) for p, b, u in zip(page_url, base_raw, url)],
+        dtype=object,
     )
-    absolute = df.where(is_abs)
-    relative = df.where(~is_abs).withColumn(
-        url, urljoin_udf(F.col(base), F.col(url))
-    )
-    return absolute.unionByName(relative)
+
+
+# Deterministic in fact; marked otherwise so the optimizer keeps a
+# filter on its output ABOVE it. A deterministic UDF lets predicate
+# pushdown copy the call into the filter below the projection, and
+# each copy becomes its own ArrowEvalPython pass over every row.
+absolute_url_udf = pandas_udf(absolute_url, StringType()).asNondeterministic()
 
 
 def uid_column(alt: str = "alt", url: str = "url") -> Column:

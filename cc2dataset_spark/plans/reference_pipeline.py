@@ -203,7 +203,7 @@ def _wat_records_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layer_a", "extraction"),
 )
 def cc_extract_image_wat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The real WAT extraction operator (explode + P4 + urljoin UDF +
+    """The real WAT extraction operator (explode + P4 + URL UDF +
     P11/P12) over WAT records derived from the documents fixture,
     deduped by uid — the reference's full single-part dataflow minus
     the archive decode, at fixture scale (~2 image links per record,

@@ -216,12 +216,18 @@ def pinned_driver_heap_conf(mem_gb: int | None = None) -> dict[str, str]:
     }
 
 
+def local_cpus() -> int:
+    """Core count for local sessions: ``$SPARK_GRAFT_CPUS``, else the
+    host's."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
+
+
 def local_session(
     cpus: int | None = None, app_name: str = "cc2dataset_spark"
 ) -> SparkSession:
     """Local test/bench session on ``local[$SPARK_GRAFT_CPUS]``."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
+        cpus = local_cpus()
     return build_spark_session(
         master=f"local[{cpus}]",
         app_name=app_name,

@@ -130,11 +130,11 @@ def test_tokenize_udtf_ascii_whitespace_only(spark, tmp_path):
 
 
 def test_absolutize_urls_null_url_passthrough(spark):
-    """A NULL url makes both startswith() branches NULL; before the
-    coalesce(false) guard BOTH complementary where()s dropped the row.
-    It must instead take the relative branch, whose urljoin kernel
-    passes None through — row count is preserved."""
-    from cc2dataset_spark.functions.links import absolutize_urls
+    """The URL kernel keeps every row: a NULL url stays NULL, an
+    absolute url passes through, a relative url joins the base."""
+    from pyspark.sql import functions as F
+
+    from cc2dataset_spark.functions.links import absolute_url_udf
 
     df = spark.createDataFrame(
         [
@@ -144,9 +144,13 @@ def test_absolutize_urls_null_url_passthrough(spark):
         ],
         ["url", "base_url"],
     )
-    got = {
-        (r.url, r.base_url) for r in absolutize_urls(df).collect()
-    }
+    out = df.select(
+        absolute_url_udf(
+            F.col("base_url"), F.lit(None).cast("string"), F.col("url")
+        ).alias("url"),
+        "base_url",
+    )
+    got = {(r.url, r.base_url) for r in out.collect()}
     assert got == {
         (None, "http://e.com/a/"),
         ("http://x/y.png", "http://e.com/a/"),

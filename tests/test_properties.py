@@ -13,7 +13,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from cc2dataset_spark.functions.links import urljoin_udf
+from cc2dataset_spark.functions.links import absolute_url_udf
 from cc2dataset_spark.operators.asof import asof_join_union
 from cc2dataset_spark.operators.dedup import dedup_exact
 
@@ -54,10 +54,13 @@ def test_urljoin_udf_matches_python(spark, pairs):
     df = spark.createDataFrame(
         pd.DataFrame(pairs, columns=["base_url", "url"]).astype("string")
     ).coalesce(1)
+    # page_url=base with a NULL <base href>: the base is the page url
     got = [
         r.out
         for r in df.select(
-            urljoin_udf(F.col("base_url"), F.col("url")).alias("out")
+            absolute_url_udf(
+                F.col("base_url"), F.lit(None).cast("string"), F.col("url")
+            ).alias("out")
         ).collect()
     ]
     want = [_py_reference(b, u) for b, u in pairs]

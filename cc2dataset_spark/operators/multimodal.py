@@ -156,7 +156,7 @@ def decode_media(
     never reshuffled here — at crawl scale that would move the whole
     corpus); callers whose source collapses to few partitions
     repartition the cheap upstream id/path stream first (see
-    plans/llm_ops._ids_across_cores).
+    operators/partitioning.spread_small).
 
     Dispatch is by PAYLOAD SIGNATURE, not the metadata format tag
     (tags lie at web scale; magic bytes don't): PNG-signature
@@ -1276,14 +1276,11 @@ def cdc_chunk_fingerprints(
     replayability choice (functions/hashes.py doctrine).
     """
     from cc2dataset_spark.functions.hashes import md5_mod
-    from cc2dataset_spark.operators.partitioning import spread_small_input
+    from cc2dataset_spark.operators.partitioning import spread_small
 
     c = F.col(text_col)
     ln = F.length(c)
-    # spread: a byte-sized scan arrives as ONE split and would run the
-    # whole per-position hash pass on one core (same hazard as the
-    # shingle chains — operators/partitioning.py)
-    base = spread_small_input(
+    base = spread_small(
         df.select(F.col(id_col).alias("_cid"), c.alias("_ct")), ref=df
     ).select("_cid", "_ct", F.length("_ct").alias("_cl")).where(
         F.col("_cl") > 0

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from cc2dataset_spark.functions.hashes import md5_mod_from_hex
 from cc2dataset_spark.functions.numeric import ratio_round6
-from cc2dataset_spark.operators.partitioning import spread_small_input
+from cc2dataset_spark.operators.partitioning import spread_small
 from cc2dataset_spark.functions.text import tokens, word_shingles
 from cc2dataset_spark.functions.vectors import (
     as_double_array,
@@ -263,7 +263,7 @@ def minhash_neardup_pairs(
 
     sh_expr = F.array_distinct(word_shingles(text_col, shingle_words))
     base = caching.track(
-        spread_small_input(df.select(F.col(id_col), F.col(text_col)), ref=df)
+        spread_small(df.select(F.col(id_col), F.col(text_col)), ref=df)
         .select(F.col(id_col), sh_expr.alias("_sh"))
         .where(F.size("_sh") > 0)
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -287,7 +287,7 @@ def exact_jaccard_pairs(
     the SQL-expressible ground truth the LSH path approximates.
     ``max_shingle_df`` drops shingles appearing in more than N docs
     (stop-shingles), the standard cap on join blowup at scale."""
-    sh = spread_small_input(df.select(F.col(id_col), F.col(text_col)), ref=df).select(
+    sh = spread_small(df.select(F.col(id_col), F.col(text_col)), ref=df).select(
         F.col(id_col),
         F.explode(F.array_distinct(word_shingles(text_col, shingle_words))).alias("s"),
     )
@@ -497,7 +497,7 @@ def prefix_filter_jaccard_pairs(
     # AFTER hashing so sizes stay self-consistent with the fingerprint
     # sets the verifier intersects.
     base = caching.track(
-        spread_small_input(df.select(F.col(id_col), F.col(text_col)), ref=df)
+        spread_small(df.select(F.col(id_col), F.col(text_col)), ref=df)
         .select(
             F.col(id_col).alias("did"),
             F.array_distinct(
@@ -861,7 +861,7 @@ def winnow_overlap_pairs(
     )
 
     hashed = (
-        spread_small_input(df.select(F.col(id_col), F.col(text_col)), ref=df)
+        spread_small(df.select(F.col(id_col), F.col(text_col)), ref=df)
         .select(F.col(id_col).alias("did"), shingle_hashes(text_col).alias("h"))
         .where(F.size("h") > 0)
     )
@@ -944,7 +944,7 @@ def sorted_neighborhood_pairs(
             f"neighborhood must be >= 2 (w-1 neighbors per row),"
             f" got {neighborhood}"
         )
-    base = spread_small_input(
+    base = spread_small(
         df.select(F.col(id_col), F.col(text_col)), ref=df
     ).select(
         F.col(id_col).alias("did"),

@@ -1,18 +1,21 @@
-"""Input-parallelism repair for compute-heavy operators.
+"""Scan-parallelism floor for compute-heavy operators.
 
 Spark sizes scan partitions by bytes (spark.sql.files.maxPartitionBytes,
-default 128 MB), which is right when the expensive work IS the scan.
-For operators whose per-row compute dwarfs the read — md5 shingle
-chains, MinHash signatures, winnowing — a corpus that fits in a couple
-of splits serializes that compute onto a couple of cores: at fixture
-scale the whole documents table reads as ONE split, so the dominant
-stage of every shingle-based query ran 1-of-32 cores (measured: the
-minhash shingle stage alone ~3 s single-task at sf0.1).
+default 128 MB), and parquet cannot split below a row group, which is
+right when the expensive work IS the scan. For operators whose per-row
+compute dwarfs the read — md5 shingle chains, MinHash signatures,
+tokenize+explode streams, the O(n*d^2) covariance explode, Arrow media
+kernels — a corpus that fits in a couple of splits serializes that
+compute onto a couple of cores: every fixture table is ONE row group,
+so its scan plans ONE partition (measured: the minhash shingle stage
+alone ~3 s single-task at sf0.1; quantized_second_moments 2.8-3.6 s
+before spreading, 0.5-0.9 s after; the WebP media rows 11-27 s at
+sf0.1 on local[32]).
 
-``spread_small_input`` repartitions ONLY when the scan came back with
-fewer splits than the session's default parallelism. On a production
-cluster reading 100 TB the input has orders of magnitude more splits
-than cores and this is a no-op — no extra shuffle, no plan change; the
+``spread_small`` repartitions ONLY when the scan came back with fewer
+splits than the session's default parallelism. On a production cluster
+reading 100 TB the input has orders of magnitude more splits than
+cores and this is a no-op — no extra shuffle, no plan change; the
 repartition fires exactly in the small-input regime where the shuffle
 it introduces is by definition cheap (the input is small).
 """
@@ -25,10 +28,13 @@ from pyspark.sql import DataFrame
 def planned_partitions(df: DataFrame) -> int:
     """Planned partition count of ``df``, memoized on the DataFrame
     object: the ``.rdd`` conversion runs a full physical-planning pass
-    on the driver EVERY call (measured 175-280 ms — r13 VERDICT note
-    #5), and the count is a pure function of the frame's plan. The
-    session-cached scan relations (sources/tables.load_table) make
-    repeat query builds hit the memo instead of re-planning."""
+    on the driver EVERY call (measured 175-280 ms), and the count is a
+    pure function of the frame's plan. The session-cached scan
+    relations (sources/tables.load_table) make repeat query builds hit
+    the memo instead of re-planning.
+
+    Probe only a scan or a frame this module memoised: below an
+    exchange, adaptive execution runs the shuffle stage to answer."""
     n = getattr(df, "_sg_scan_parts", None)
     if n is None:
         n = df.rdd.getNumPartitions()
@@ -39,32 +45,32 @@ def planned_partitions(df: DataFrame) -> int:
     return n
 
 
-def spread_small_input(
-    df: DataFrame,
-    min_parts: int | None = None,
-    ref: DataFrame | None = None,
+def spread_small(
+    df: DataFrame, *key_cols: str, ref: DataFrame | None = None
 ) -> DataFrame:
-    """Round-robin repartition ``df`` to the session's default
-    parallelism iff its current partition count is lower. Spark's
-    round-robin repartition sorts within partitions first, so the
-    result is deterministic under task retry.
+    """Repartition ``df`` to the session's default parallelism iff its
+    planned partition count is lower; otherwise return ``df`` as is.
 
-    ``ref``: optional frame whose planned partition count equals
-    ``df``'s (a NARROW ancestor — e.g. the base the caller just
-    projected with ``.select``). Probing the ancestor instead of the
-    fresh projection lets the per-object memo (``planned_partitions``)
-    absorb the driver-side planning pass across query builds; the
-    count is identical because narrow projections never change
-    partitioning."""
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    With ``key_cols`` the repartition hash-partitions on them
+    (deterministic, no local sort); without, it is round-robin, which
+    Spark makes deterministic under task retry by sorting within
+    partitions first (a cheap pass on this tiny input). Never use on
+    plans that depend on partition placement (spark_partition_id,
+    monotonically_increasing_id, per-partition sampling).
+
+    ``ref``: optional NARROW ancestor of ``df`` (e.g. the base table a
+    caller just projected with ``.select``) whose planned partition
+    count equals ``df``'s. Probing the ancestor instead of the fresh
+    projection lets the per-object memo absorb the driver-side
+    planning pass across query builds."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n_parts = planned_partitions(ref if ref is not None else df)
     except Exception:
         return df
     if n_parts >= target:
         return df
-    out = df.repartition(target)
+    out = df.repartition(target, *key_cols)
     try:
         out._sg_scan_parts = target  # the spread output's count is known
     except Exception:

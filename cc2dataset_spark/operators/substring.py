@@ -120,6 +120,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
 from cc2dataset_spark.functions import text as T
+from cc2dataset_spark.operators.partitioning import spread_small
 
 
 def _adjacent_scan(min_len: int):
@@ -311,14 +312,8 @@ def duplicate_substring_spans(
 
     doc_id_type = docs.schema[doc_id_col].dataType
     # The tokenize+explode suffix build is the corpus-scale CPU stage
-    # and it runs TWICE (the range sampler evaluates it once more), so
-    # it must engage every core; a single-row-group source (the
-    # fixture layout) plans a 1-partition scan that would serialize
-    # both passes onto one core (guide §2.5 — no-op when the scan
-    # already has >= defaultParallelism partitions).
-    from cc2dataset_spark.sources.tables import spread_small_scan
-
-    toked = spread_small_scan(
+    # and it runs TWICE (the range sampler evaluates it once more).
+    toked = spread_small(
         docs.select(
             F.col(doc_id_col).alias("doc_id"), F.col(text_col)
         ),

@@ -18,8 +18,9 @@ from pyspark.sql import functions as F
 from cc2dataset_spark.functions import text as T
 from cc2dataset_spark.functions.hashes import md5_mod
 from cc2dataset_spark.functions.numeric import RATIO6_BIG_SQL, RATIO6_SQL
+from cc2dataset_spark.operators.partitioning import spread_small
 from cc2dataset_spark.plans.catalog import query
-from cc2dataset_spark.sources.tables import load_table, spread_small_scan
+from cc2dataset_spark.sources.tables import load_table
 
 _DUCK_TOKENS = r"list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '')"
 
@@ -63,11 +64,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-k — no global sort. The idf is rounded to 6 decimals
     BEFORE the tf multiply so libm ulp differences between the JVM and
     DuckDB cannot flip the ranking; ties break on the term string."""
-    # corpus-scale tokenize/explode over the 1-partition single-row-
-    # group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     tok = docs.select(
         "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
     )
@@ -299,11 +296,7 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimals (libm ulps die there), the term to 12, and the terms sum
     in DECIMAL(38,18) so accumulation order cannot matter; the final
     value rounds to 6."""
-    # corpus-scale per-CHARACTER explode over the 1-partition single-
-    # row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     ch = docs.select(
         "doc_id",
         F.explode(
@@ -365,20 +358,18 @@ _NLL_CTES = rf"""tok AS (
     )"""
 
 
-def _per_doc_nll(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, mean_nll) — the Spark twin of _NLL_CTES."""
-    tok = docs.select(
-        "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
-    )
-    # COUNT(*) over the exploded stream == SUM(size(tokens)) over the
-    # un-exploded rows (empty/NULL arrays explode to zero rows and
-    # sum as 0/NULL-skipped): same integer, but this pass no longer
-    # materializes the corpus-sized token stream just to count it
-    # (guide §2.3 "shuffle fewer bytes" applied to the Generate:
-    # tokenize once per row, emit one int)
-    # (NULL text guarded explicitly: legacy size(NULL) = -1 would
-    # corrupt the sum, while explode of NULL contributes zero rows)
-    total = docs.agg(
+def _corpus_token_total(docs: DataFrame) -> DataFrame:
+    """1-row (n_total DOUBLE): the corpus token count.
+
+    COUNT(*) over the exploded token stream == SUM(size(tokens)) over
+    the un-exploded rows (empty/NULL arrays explode to zero rows and
+    sum as 0): same integer, but this pass no longer materializes the
+    corpus-sized token stream just to count it (guide §2.3 "shuffle
+    fewer bytes" applied to the Generate: tokenize once per row, emit
+    one int). NULL text is guarded explicitly: legacy size(NULL) = -1
+    would corrupt the sum, while explode of NULL contributes zero
+    rows."""
+    return docs.agg(
         F.sum(
             F.when(
                 F.col("text").isNotNull(),
@@ -388,6 +379,14 @@ def _per_doc_nll(docs: DataFrame) -> DataFrame:
         .cast("double")
         .alias("n_total")
     )
+
+
+def _per_doc_nll(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, mean_nll) — the Spark twin of _NLL_CTES."""
+    tok = docs.select(
+        "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
+    )
+    total = _corpus_token_total(docs)
     uc = F.count("*").over(Window.partitionBy("term"))
     srp = F.round(-F.log(uc.cast("double") / F.col("n_total")), 9)
     return (
@@ -438,11 +437,7 @@ def text_unigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc sum accumulates in DECIMAL(38,18) so order cannot matter,
     the mean rounds to 6, and exp of that already-identical mean
     re-rounds to 6."""
-    # corpus-scale per-row CPU over the 1-partition single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     return _per_doc_nll(docs).select(
         "doc_id",
         "n_tokens",
@@ -520,11 +515,7 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (IEEE ops are deterministic given the same tree),
     each surprisal rounds to 9, the per-doc sum accumulates in
     DECIMAL(38,18), the mean rounds to 6, exp re-rounds to 6."""
-    # corpus-scale per-row CPU over the 1-partition single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     t = docs.select(
         "doc_id", T.tokens(F.lower(F.col("text"))).alias("tk")
     ).where(F.size("tk") >= 2)
@@ -542,22 +533,7 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = tok.groupBy("term").agg(
         F.count("*").cast("double").alias("c_uni")
     )
-    # n_total == COUNT(*) over the exploded token stream; computed as
-    # SUM(size(tokens)) over the un-exploded rows instead (same
-    # integer — empty/NULL arrays explode to zero rows and sum as 0),
-    # so the third corpus pass stops materializing a Generate just to
-    # count its rows (guide §2.3). NULL text guarded: legacy
-    # size(NULL) = -1 would corrupt the sum.
-    total = docs.agg(
-        F.sum(
-            F.when(
-                F.col("text").isNotNull(),
-                F.size(T.tokens(F.lower(F.col("text")))),
-            ).otherwise(F.lit(0))
-        )
-        .cast("double")
-        .alias("n_total")
-    )
+    total = _corpus_token_total(docs)
     w_big = Window.partitionBy("prev", "cur")
     w_prev = Window.partitionBy("prev")
     scored = (
@@ -627,11 +603,7 @@ def curate_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.storagelevel import StorageLevel
 
-    # corpus-scale per-row CPU over the 1-partition single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     # persisted because the range partitioner's boundary-sampling pass
     # is a full extra evaluation of the surprisal chain otherwise
     from cc2dataset_spark import caching
@@ -925,11 +897,7 @@ def curate_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     back onto the per-doc-bucket stream, so the scoring join is
     shuffle-free and the per-doc rollup rides the existing doc-keyed
     partials. The corpus is scanned ONCE."""
-    # corpus-scale per-row CPU over the 1-partition single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     bg = docs.select(
         "doc_id",
         (F.col("lang") == "en").alias("tgt"),
@@ -1043,11 +1011,7 @@ def text_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from cc2dataset_spark import caching
 
-    # corpus-scale tokenize/zip/explode over the 1-partition single-
-    # row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     t = docs.select(
         T.tokens(F.lower(F.col("text"))).alias("tk")
     ).where(F.size("tk") >= 2)
@@ -1432,11 +1396,7 @@ def curate_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB, no quadratic surface anywhere."""
     from cc2dataset_spark.operators.dedup import dedup_paragraphs
 
-    # corpus-scale per-row CPU over the 1-partition single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     tok = docs.select(
         "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
     ).where(F.size("t") > 0)
@@ -1784,11 +1744,7 @@ def text_kneser_ney_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from cc2dataset_spark import caching
 
-    # corpus-scale tokenize/zip/explode over the 1-partition single-
-    # row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     t = docs.select(
         "doc_id", T.tokens(F.lower(F.col("text"))).alias("tk")
     )
@@ -2144,9 +2100,7 @@ def curate_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric."""
     from cc2dataset_spark.operators.rank import global_row_number
 
-    # corpus-scale per-row CPU over the 1-partition single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism)
-    docs = spread_small_scan(
+    docs = spread_small(
         load_table(spark, sf_dir, "documents"), "doc_id"
     ).select(
         "doc_id", "text", "lang"
@@ -2275,11 +2229,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, prev, cur) dedup is the corpus-scale stage (map-side
     partials absorb duplication); both aggregates ride it; output is
     bucket-count-sized."""
-    # corpus-scale per-row CPU over the 1-partition single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     t = docs.select(
         "doc_id", T.tokens(F.lower(F.col("text"))).alias("tk")
     ).where(F.size("tk") >= 2)

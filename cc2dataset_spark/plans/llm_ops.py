@@ -20,8 +20,9 @@ from cc2dataset_spark.operators import multimodal as MM
 from cc2dataset_spark.operators import neardup as ND
 from cc2dataset_spark.operators import similarity as SIM
 from cc2dataset_spark.operators.dedup import dedup_exact
+from cc2dataset_spark.operators.partitioning import spread_small
 from cc2dataset_spark.plans.catalog import query
-from cc2dataset_spark.sources.tables import load_table, spread_small_scan
+from cc2dataset_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
 # Text analysis
@@ -437,11 +438,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs contributes N^2 join rows, so the uncapped form (kept for the
     pytest ground-truth comparison only) detonates on boilerplate at
     corpus scale."""
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     return ND.exact_jaccard_pairs(docs, threshold=0.5, max_shingle_df=100)
 
 
@@ -513,11 +510,7 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|x| - ceil(t|x|) + 1) shingles, so the hot keys never enter the
     join at all. The oracle is the uncapped all-pairs ground truth —
     a missed candidate fails the driver row."""
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     return ND.prefix_filter_jaccard_pairs(docs)
 
 
@@ -569,11 +562,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash blocking. Spark ranks via the range-repartition global rank,
     never an unpartitioned ROW_NUMBER; the oracle can afford the naive
     window."""
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     return ND.sorted_neighborhood_pairs(docs, neighborhood=4, threshold=0.5)
 
 
@@ -692,12 +681,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy accumulation is sequential over dims, bit-matching DuckDB's
     list_dot_product fold) but benchable — B x B cosine tiles instead
     of a row-per-pair interpreted HOF chain."""
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     return ND.embedding_neardup_pairs_blocked(emb, threshold=0.35)
 
 
@@ -745,12 +729,7 @@ def dedup_simhash_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquadratic scale path for dedup_embedding_cosine. Oracle-backed:
     hyperplanes are shared literals, so DuckDB reproduces the exact
     buckets and verified pairs."""
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     return ND.simhash_neardup_pairs(emb, threshold=0.35)
 
 
@@ -860,12 +839,7 @@ def top_tokens_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-3 cosine neighbors for the first 20 query vectors."""
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     return SIM.brute_force_topk(emb.where(F.col("vec_id") < 20), emb, k=3)
 
 
@@ -937,12 +911,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-asserted in tests/test_joins_scale.py). kmeans_iters=0 keeps
     the registered query deterministic; the Lloyd-refined path is
     tested separately."""
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     return SIM.ivf_topk(emb.where(F.col("vec_id") < 20), emb, k=3)
 
 
@@ -985,12 +954,7 @@ def ann_simhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-3 via SimHash buckets, oracle-backed (shared
     hyperplane literals make the buckets cross-engine-deterministic);
     recall vs the exact path is asserted in tests/test_llm_ops.py."""
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     return SIM.simhash_ann_topk(emb.where(F.col("vec_id") < 20), emb, k=3)
 
 
@@ -1030,12 +994,7 @@ def ann_simhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-NN majority-label classification with deterministic ties."""
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     return SIM.knn_label_vote(emb.where(F.col("vec_id") < 50), emb, k=5)
 
 
@@ -1216,11 +1175,7 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint-set digest, so the entire windowed-min pipeline is
     value-checked; fingerprint-sharing semantics are unit-tested in
     tests/test_llm_ops.py."""
-    # corpus-scale per-row CPU over the 1-partition single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     # Three-phase projection ON PURPOSE: the hash array must be a
     # materialized attribute before windowing, or Catalyst re-expands
     # it per window index (O(n^2) md5 per doc — measured 48 s vs 2 s
@@ -1285,11 +1240,7 @@ def dedup_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth; the winnow selection keeps ~1/window of the shingle
     stream, so this joins ~4x less data than dedup_ngram_jaccard at
     the same shingle length."""
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     return ND.winnow_overlap_pairs(
         docs,
         min_shared=_WINNOW_MIN_SHARED,
@@ -1584,11 +1535,7 @@ def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     side converges in ~diameter rounds of keyed joins at any scale."""
     from cc2dataset_spark.operators.components import cluster_survivors
 
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = ND.exact_jaccard_pairs(docs, threshold=0.5, max_shingle_df=100)
     return cluster_survivors(docs, pairs.select("id_a", "id_b"), "doc_id")
 
@@ -1611,11 +1558,7 @@ def dedup_cluster_survivors_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground-truth twin."""
     from cc2dataset_spark.operators.components import cluster_survivors
 
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = ND.minhash_neardup_pairs(docs, threshold=0.5)
     return cluster_survivors(docs, pairs.select("id_a", "id_b"), "doc_id")
 
@@ -1639,11 +1582,7 @@ def dedup_cluster_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components_twophase,
     )
 
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = ND.minhash_neardup_pairs(docs, threshold=0.5)
     return cluster_survivors(
         docs,
@@ -1724,12 +1663,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor 8 / target cluster 128 — identical clustering to the old
     fixed 8 at fixture SFs, linear candidate volume at scale; the
     oracle replays the formula as a scalar subquery)."""
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     return SIM.semantic_dedup(emb, threshold=0.35, n_assign=3)
 
 
@@ -1863,11 +1797,7 @@ def curate_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     by doc_id); the oracle replays injection and overlap exactly."""
     from cc2dataset_spark.operators.contamination import ngram_decontaminate
 
-    # corpus-scale per-row CPU over the 1-partition single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     words = F.split(F.lit(_EVAL_SENTENCE), " ")
     appendix = F.when(
         F.col("doc_id") % 7 == 0,
@@ -1982,11 +1912,7 @@ def curate_full_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cc2dataset_spark.functions.hashes import md5_mod
     from cc2dataset_spark.operators.components import cluster_survivors
 
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     kept = docs.where(
         T.token_count("text").between(20, 1000)
         & (T.punct_ratio("text") < 0.1)
@@ -2140,12 +2066,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     which at 100 TB is what lets the index fit at all. Fully
     oracle-backed: the codebook is the md5-seeded sample, encoding
     and ADC are bit-identical double folds in both engines."""
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     cb = SIM.pq_codebook(emb)
     return SIM.pq_topk(emb.where(F.col("vec_id") < 5), emb, cb, k=3)
 
@@ -2264,12 +2185,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map over the corpus, which is never shuffled. Composes the
     two individually-replayable index structures, so the whole thing
     stays oracle-backed."""
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     # codebook=None: centroid seed + codebook slice out of ONE bounded
     # hash-sample collect (identical structures to the two-collect
     # fit; r14 VERDICT ask #6 — half the driver-job stall exposure)
@@ -2331,11 +2247,7 @@ def dedup_ngram_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle family)."""
     from cc2dataset_spark.functions.numeric import ratio_round6
 
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     # Pin ONE gram-keyed exchange: the df count (distinct + agg) and
     # the annotation join both require only clustering by g, which
     # this partitioning satisfies, so runtime exchange reuse computes
@@ -2871,12 +2783,7 @@ def embed_covariance_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantized_second_moments,
     )
 
-    # O(n*d^2) explode must engage every core; the single-row-group
-    # embeddings fixture plans a 1-partition scan (guide §2.5;
-    # measured 2.8-3.6 s -> 0.5-0.9 s warm at sf0.1).
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     agg = quantized_second_moments(emb, "embedding")
     dec = "decimal(38,0)"
     num = F.col("n").cast(dec) * F.col("s_ij").cast(dec) - F.col(
@@ -2965,11 +2872,7 @@ def multimodal_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     and drop out, same convention as the shingle family."""
     from cc2dataset_spark.functions.numeric import ratio_round6
 
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     ex = (
         MM.cdc_chunk_fingerprints(docs, "text", "doc_id", window=8, modulus=32)
         .where(F.col("fp").isNotNull())
@@ -3064,11 +2967,7 @@ def er_snm_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive query."""
     from cc2dataset_spark.operators.components import cluster_survivors
 
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = ND.sorted_neighborhood_pairs(docs)
     return cluster_survivors(docs, pairs.select("id_a", "id_b"), "doc_id")
 
@@ -3113,22 +3012,17 @@ def text_heavy_hitter_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     from cc2dataset_spark import caching
-    from cc2dataset_spark.operators.partitioning import spread_small_input
     from cc2dataset_spark.operators.sketches import misra_gries_candidates
 
     k = 200
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     # persist the exploded stream: three consumers (MG pass, total,
     # candidate counts) would otherwise each re-run the corpus scan +
     # explode — the dominant stage — tripling the wall time
     words = caching.track(
-        spread_small_input(
-            docs.select(F.explode(T.tokens("text")).alias("word"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        docs.select(F.explode(T.tokens("text")).alias("word")).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
     )
     cands = misra_gries_candidates(words, "word", k)
     total = words.agg(F.count("*").cast("bigint").alias("corpus_tokens"))
@@ -3230,12 +3124,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     QUERY_TERMS = ("spark", "vector", "hash")
     K1_TOP = 10
-    # corpus-scale tokenize (twice: dl projection + the filtered
-    # explode) over the 1-partition single-row-group fixture scan
-    # (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     toks = T.tokens(F.lower(F.col("text")))
     dls = docs.select(
         "doc_id", F.size(toks).cast("bigint").alias("dl")
@@ -3540,7 +3429,7 @@ def multimodal_image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture scan also stops serializing the walk onto one core.
     docs = load_table(spark, sf_dir, "documents")
     payload = F.concat(F.unhex(hdr), F.encode(F.col("text"), "utf-8"))
-    hexed = spread_small_scan(
+    hexed = spread_small(
         docs.select(
             "doc_id", F.upper(F.hex(payload)).alias("_hx")
         ),
@@ -3554,21 +3443,6 @@ def multimodal_image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         dims["width"].alias("width"),
         dims["height"].alias("height"),
     )
-
-
-
-def _ids_across_cores(df):
-    """doc_id stream repartitioned to the session's core count so an
-    Arrow media kernel engages every executor thread. The fixture
-    documents table is ONE parquet file -> one scan partition, which
-    silently serialized every mapInPandas media kernel onto a single
-    core (r13 finding: the WebP rows measured 11-27 s at sf0.1 on
-    local[32] purely from this). The exchange moves 8 bytes/row —
-    negligible against the per-payload decode work it spreads; at
-    production scale it pins kernel parallelism to cores instead of
-    source file count."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism)
 
 
 def _package_root() -> str:
@@ -3708,7 +3582,7 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 @query(
@@ -3842,7 +3716,7 @@ def multimodal_png_ahash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=["doc_id", "ahash_bits"])
 
     docs = load_table(spark, sf_dir, "documents")
-    hashed = _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    hashed = spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
     w_grp = Window.partitionBy("ahash_bits")
     return hashed.select(
         "doc_id",
@@ -3946,7 +3820,7 @@ def multimodal_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 @query(
@@ -4073,7 +3947,7 @@ def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 @query(
@@ -4169,7 +4043,7 @@ def multimodal_wav_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 @query(
@@ -4284,7 +4158,9 @@ def multimodal_decode_real_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cc2dataset_spark.operators.multimodal import decode_media
 
     docs = load_table(spark, sf_dir, "documents")
-    wrapped = _ids_across_cores(docs.select("doc_id")).mapInPandas(synth, pay_schema)
+    wrapped = spread_small(docs.select("doc_id"), ref=docs).mapInPandas(
+        synth, pay_schema
+    )
     decoded = decode_media(wrapped)
     return decoded.select(
         "doc_id", "format", "width", "height", "n_frames"
@@ -4400,7 +4276,7 @@ def multimodal_wav_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 @query(
@@ -4468,11 +4344,7 @@ def dedup_cluster_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection), clustering cost is shared with the min-id twin."""
     from cc2dataset_spark.operators.components import cluster_best_survivors
 
-    # corpus-scale tokenize/shingle CPU over the 1-partition
-    # single-row-group fixture scan (guide §2.5; no-op at production)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = ND.sorted_neighborhood_pairs(docs)
     tok = docs.select("doc_id", "text", T.tokens("text").alias("t"))
     # the ONE quality formula (functions/text) — survivorship must
@@ -4609,11 +4481,7 @@ def profile_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source totals. At 100 TB the only corpus-scale stages are the
     explode and the distinct exchange; everything after is
     sources^2-bounded."""
-    # The shingle explode is the corpus-scale CPU stage and the
-    # single-row-group fixture scan plans 1 partition (guide §2.5).
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    )
+    docs = spread_small(load_table(spark, sf_dir, "documents"), "doc_id")
     sh = (
         docs.select(
             "source",
@@ -4897,12 +4765,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cc2dataset_spark.operators import similarity as SIM
 
     docs = load_table(spark, sf_dir, "documents")
-    # every consumer below does per-row O(d) vector math and the
-    # single-row-group embeddings fixture plans a 1-partition scan
-    # (guide §2.5; no-op at production parallelism)
-    emb = spread_small_scan(
-        load_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
+    emb = spread_small(load_table(spark, sf_dir, "embeddings"), "vec_id")
     tok = docs.select(
         "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
     )
@@ -5157,7 +5020,9 @@ def multimodal_decode_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cc2dataset_spark.operators.multimodal import decode_media
 
     docs = load_table(spark, sf_dir, "documents")
-    wrapped = _ids_across_cores(docs.select("doc_id")).mapInPandas(synth, pay_schema)
+    wrapped = spread_small(docs.select("doc_id"), ref=docs).mapInPandas(
+        synth, pay_schema
+    )
     decoded = decode_media(wrapped, errors="status")
     return decoded.select(
         "doc_id", "format", "width", "height", "n_frames", "status"
@@ -5293,7 +5158,9 @@ def multimodal_resize_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     from cc2dataset_spark.operators.multimodal import resize_media
 
     docs = load_table(spark, sf_dir, "documents")
-    wrapped = _ids_across_cores(docs.select("doc_id")).mapInPandas(synth, pay_schema)
+    wrapped = spread_small(docs.select("doc_id"), ref=docs).mapInPandas(
+        synth, pay_schema
+    )
     resized = resize_media(wrapped, width=16, height=16)
     return resized.select(
         "doc_id", "width", "height", "payload"
@@ -5431,7 +5298,7 @@ def multimodal_wav_g711_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 @query(
@@ -5513,7 +5380,7 @@ def multimodal_jpeg_progressive_stats(
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 @query(
@@ -5643,7 +5510,7 @@ def multimodal_gif_animation_stats(
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 # --------------------------------------------------------------------------
@@ -5840,7 +5707,7 @@ def multimodal_webp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 # --------------------------------------------------------------------------
@@ -5971,7 +5838,7 @@ def multimodal_exif_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 # --------------------------------------------------------------------------
@@ -6137,7 +6004,7 @@ def multimodal_webp_animation_stats(
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    return _ids_across_cores(docs.select("doc_id")).mapInPandas(batches, schema)
+    return spread_small(docs.select("doc_id"), ref=docs).mapInPandas(batches, schema)
 
 
 # --------------------------------------------------------------------------
@@ -6303,7 +6170,7 @@ def multimodal_wav_resample_stats(
             yield pd.DataFrame(recs, columns=cols)
 
     docs = load_table(spark, sf_dir, "documents")
-    wrapped = _ids_across_cores(docs.select("doc_id")).mapInPandas(
+    wrapped = spread_small(docs.select("doc_id"), ref=docs).mapInPandas(
         synth, pay_schema
     )
     return wrapped.mapInPandas(stats, schema)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cc2dataset_spark.functions.numeric import RATIO6_SQL
+from cc2dataset_spark.operators.partitioning import spread_small
 from cc2dataset_spark.plans.catalog import query
 from cc2dataset_spark.sources.tables import load_table
 
@@ -227,12 +228,8 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     from cc2dataset_spark import caching
-    from cc2dataset_spark.plans.llm_ops import _ids_across_cores
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # 8-byte id exchange buys full-core decode parallelism (the
-    # fixture table is one scan partition — see _ids_across_cores)
-    #
+    docs = load_table(spark, sf_dir, "documents")
     # PERSISTED (guide §5/§8): the hash frame feeds FOUR plan branches
     # (both sides of the banded self-join + both verification joins),
     # and without the pin each branch re-runs the PNG encode->decode->
@@ -244,7 +241,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every execution and released by the @query wrapper's generation
     # protocol (cc2dataset_spark/caching.py).
     img = caching.track(
-        _ids_across_cores(docs)
+        spread_small(docs.select("doc_id"), ref=docs)
         .mapInPandas(hash_batches, hash_schema)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -18,9 +18,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cc2dataset_spark.functions.numeric import RATIO6_SQL
+from cc2dataset_spark.operators.partitioning import spread_small
 from cc2dataset_spark.plans.catalog import query
 from cc2dataset_spark.plans.relational import dsum, _osum
-from cc2dataset_spark.sources.tables import load_table, spread_small_scan
+from cc2dataset_spark.sources.tables import load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -653,13 +654,11 @@ def profile_lineitem_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     row = li.agg(*aggs)
     # The melt explodes 6 structs per row (6x the scan) and partial-
-    # aggregates the (column_name, value) pairs — corpus-scale per-row
-    # CPU that serializes onto one core over the single-row-group
-    # fixture scan (guide §2.5; no-op at production parallelism). The
+    # aggregates the (column_name, value) pairs, so it is spread. The
     # wide min/max/null branch stays unspread on purpose: its simple
     # partial aggs pipeline with the scan, and repartitioning that
-    # shape measured 2x slower (r13, q1-shape re-test).
-    melted = spread_small_scan(li, "l_orderkey").select(
+    # shape measured 2x slower (q1-shape re-test).
+    melted = spread_small(li, "l_orderkey").select(
         F.explode(
             F.array(
                 *[

@@ -105,62 +105,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
-
-def spread_small_scan(
-    df: DataFrame, *key_cols: str, ref: DataFrame | None = None
-) -> DataFrame:
-    """Scan-parallelism floor for CPU-heavy narrow stages (guide §2.5:
-    unsplittable input -> repartition right after the read).
-
-    The fixture tables are SINGLE-row-group parquet files, and parquet
-    cannot split below row-group boundaries, so a scan of e.g.
-    documents (0.6 MB at sf0.1) plans exactly ONE partition — every
-    narrow per-row stage built on it (tokenize+explode suffix streams,
-    the O(n*d^2) covariance explode, interpreted HOF folds) serializes
-    onto one core of local[32]. Measured r13-opt:
-    quantized_second_moments over the 1-partition embeddings scan runs
-    2.8-3.6 s; after spreading, 0.5-0.9 s.
-
-    SCALE-ADAPTIVE, not a local[32] constant: the repartition happens
-    only when the planned scan has fewer partitions than the session's
-    defaultParallelism. At production scale the source is thousands of
-    files/row groups, the condition is false, and the input DataFrame
-    is returned untouched (no exchange in the plan). When it does
-    fire, the exchange carries a table that is by construction smaller
-    than one row group (KBs-to-MBs).
-
-    Pass ``key_cols`` to hash-partition (deterministic, no local sort);
-    without keys, round-robin ``repartition(n)`` (which pays the
-    sort-before-repartition pass on its tiny input). Never use on
-    plans that depend on partition placement (spark_partition_id,
-    monotonically_increasing_id, per-partition sampling).
-
-    ``ref``: optional NARROW ancestor of ``df`` (e.g. the base table a
-    caller just projected) whose planned partition count equals
-    ``df``'s; probing the ancestor lets the per-object memo absorb the
-    driver-side planning pass across query builds.
-    """
-    from cc2dataset_spark.operators.partitioning import planned_partitions
-
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    # planned_partitions memoizes the 175-280 ms driver-side planning
-    # pass per DataFrame object (r13 VERDICT note #5); the session-
-    # cached scan relations above make repeat query builds hit it.
-    try:
-        n_parts = planned_partitions(ref if ref is not None else df)
-    except Exception:
-        return df
-    if n_parts >= target:
-        return df
-    if key_cols:
-        from pyspark.sql import functions as F
-
-        out = df.repartition(target, *[F.col(c) for c in key_cols])
-    else:
-        out = df.repartition(target)
-    try:
-        out._sg_scan_parts = target  # the spread output's count is known
-    except Exception:
-        pass
-    return out

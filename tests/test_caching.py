@@ -93,17 +93,3 @@ def test_minhash_shingle_cache_released_between_queries(spark, sf_dir):
     q["text_token_stats"](spark, sf_dir).count()
     q["text_quality_scores"](spark, sf_dir).count()
     assert _n_cached(spark) == base
-
-
-def test_spread_small_input_is_noop_on_wide_input(spark):
-    from cc2dataset_spark.operators.partitioning import spread_small_input
-
-    target = spark.sparkContext.defaultParallelism
-    wide = spark.range(1000).repartition(target + 4)
-    assert spread_small_input(wide) is wide
-    narrow = spark.range(1000).coalesce(1)
-    spread = spread_small_input(narrow)
-    assert spread.rdd.getNumPartitions() == target
-    # row-preserving
-    assert spread.count() == 1000
-    assert set(r.id for r in spread.collect()) == set(range(1000))

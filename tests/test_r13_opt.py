@@ -1,31 +1,11 @@
 """Focused regression tests for the r13 optimization-round changes:
-spread_small_scan's conditional behavior and the image_dims hex-twin
-refactor (2-int fold accumulator + pre-hexed variant)."""
+the driver union-find broadcast and the image_dims hex-twin refactor
+(2-int fold accumulator + pre-hexed variant)."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from cc2dataset_spark.operators import multimodal as MM
-from cc2dataset_spark.sources.tables import spread_small_scan
-
-
-def test_spread_small_scan_spreads_single_partition(spark):
-    df = spark.range(0, 1000, 1, 1)  # 1 partition by construction
-    out = spread_small_scan(df, "id")
-    assert out.rdd.getNumPartitions() == (
-        spark.sparkContext.defaultParallelism
-    )
-    # content unchanged
-    assert out.count() == 1000
-    assert out.agg(F.sum("id")).collect()[0][0] == 999 * 1000 // 2
-
-
-def test_spread_small_scan_noop_when_already_parallel(spark):
-    target = spark.sparkContext.defaultParallelism
-    df = spark.range(0, 1000, 1, target + 4)
-    out = spread_small_scan(df, "id")
-    # must return the input untouched — no exchange in the plan
-    assert out is df
 
 
 def test_driver_union_find_labels_are_broadcast(spark):

@@ -1,8 +1,11 @@
 """Driver simulation: exercise __spark_entry__ exactly as the driver would.
 
 Fresh process, import the contract module, run entry() at sf0.001,
-then run every queries() entry at sf0.01 against oracle_sql() on DuckDB,
-comparing row-count + column names + order-insensitive values.
+then run every queries() entry (or only the NAMEs given) at sf0.01
+against oracle_sql() on DuckDB, comparing row-count + column names +
+order-insensitive values. Exit 0 iff every query matches.
+
+Usage: python tools/driver_sim.py [NAME ...]
 """
 import json
 import math
@@ -11,15 +14,18 @@ import sys
 from datetime import date, datetime
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as contract
+from cc2dataset_spark.session import local_cpus
 
+# A bare builder, not session.build_spark_session: the driver brings
+# its own session, so none of the package's session confs may apply.
 spark = (
-    SparkSession.builder.master("local[32]")
+    SparkSession.builder.master(f"local[{local_cpus()}]")
     .appName("driver-sim")
     .config("spark.sql.shuffle.partitions", "32")
     .config("spark.ui.enabled", "false")
@@ -74,9 +80,9 @@ def norm(v):
 qs = contract.queries()
 osql = contract.oracle_sql()
 results = {}
-for name, fn in sorted(qs.items()):
+for name in sys.argv[1:] or sorted(qs):
     try:
-        sdf = fn(spark, SF)
+        sdf = qs[name](spark, SF)
         scols = sorted(sdf.columns)
         srows = sorted(
             (tuple(norm(r[c]) for c in scols) for r in sdf.collect()),

@@ -58,13 +58,12 @@ def main() -> None:
         "Per headline query: the plan properties that matter at 100 TB,",
         "read from `.explain('formatted')` at sf0.1.",
         "",
-        "Exchange counts include the r13-opt `spread_small_scan` /",
-        "`_ids_across_cores` repartitions, which fire ONLY when the",
-        "planned scan has fewer partitions than the cluster (the",
-        "single-row-group fixture files at this SF); at production",
-        "parallelism the spread branch returns its input untouched and",
-        "those exchanges (and the spread key in ReadSchema) disappear",
-        "(tests/test_r13_opt.py pins the no-op branch).",
+        "Exchange counts include the `operators/partitioning.spread_small`",
+        "repartitions, which fire when the planned scan has fewer",
+        "partitions than the cluster (the single-row-group fixture files",
+        "at this SF); at production parallelism it returns its input",
+        "untouched and those exchanges (and the spread key in ReadSchema)",
+        "disappear (tests/test_partitioning.py pins the no-op branch).",
         "",
         "| query | pushed filters | broadcast joins | sort-merge joins |"
         " exchanges | TakeOrdered | WindowGroupLimit |",
